@@ -27,15 +27,6 @@ object DedupOps {
       .drop("fp")
   }
 
-  /** Word-level shingles (n-grams) of the normalized text, as an array
-    * column. Pure Column expr — no UDF, no shuffle. */
-  def shingles(text: Column, n: Int): Column = {
-    val words = split(TextOps.normalize(text), " ")
-    when(size(words) < n, array(array_join(words, " ")))
-      .otherwise(transform(sequence(lit(0), size(words) - n),
-        i => array_join(slice(words, i + 1, lit(n)), " ")))
-  }
-
   /** Deterministic splitmix64-derived odd multipliers/offsets for the
     * permutation family (a_i * h + b_i over Z/2^64 — wraparound is fine
     * for a hash family). */
@@ -99,18 +90,18 @@ object DedupOps {
       .select(col("id1"), col("id2")).distinct()
   }
 
-  /** Distinct word n-gram shingle set of the normalized text — native
-    * single-pass expression, value-identical to
-    * `array_distinct(shingles(text, n))` (whose `transform` lambda runs
-    * interpreted; the native form is the verify-stage hot path). */
+  /** Distinct word n-gram shingles of the normalized text, in first-
+    * occurrence order — [[shingleList]] with duplicates dropped, built in
+    * the same native pass. */
   def shingleSet(text: Column, n: Int): Column = {
     import org.apache.spark.sql.graft.{shims, ShingleSetExpr}
     shims.column(ShingleSetExpr(shims.expression(text), n))
   }
 
-  /** Ordered multiset of word n-gram shingles — native, value-identical
-    * to [[shingles]]; use on corpus-wide explode paths where the
-    * interpreted `transform` lambda dominates. */
+  /** Word-level shingles (n-grams) of the normalized text, in order,
+    * duplicates kept; a text with fewer than n words is one shingle, the
+    * whole text. One native pass per row — no UDF, no lambda, no
+    * shuffle. */
   def shingleList(text: Column, n: Int): Column = {
     import org.apache.spark.sql.graft.{shims, ShingleListExpr}
     shims.column(ShingleListExpr(shims.expression(text), n))
@@ -526,30 +517,31 @@ object DedupOps {
     *    inside each doc, then a global distinct on the train side —
     *    partial-aggregated, so the shuffle carries unique n-grams, not
     *    corpus positions);
-    *  - one hash equi-join (left_semi) from eval shingles to the train
-    *    vocabulary — no row blowup: semi-join emits at most the eval
-    *    side. At 100 TB the join key would be xxhash64(shingle) (8
-    *    bytes instead of the string); the gate keeps the raw string so
-    *    the DuckDB oracle can reproduce it exactly.
+    *  - one hash equi-join (left outer, flagging hits) from eval
+    *    shingles to the train vocabulary — no row blowup: the
+    *    vocabulary is distinct, so the join emits exactly the eval side,
+    *    and one per-doc count follows. At 100 TB the join key would be
+    *    xxhash64(shingle) (8 bytes instead of the string); the gate
+    *    keeps the raw string so the DuckDB oracle can reproduce it
+    *    exactly.
     *
     * Returns (idCol, n_shingles, n_contaminated, contamination) — the
     * floor4 contaminated fraction; docs above a threshold get dropped
     * from eval (or the training docs containing them get dropped). */
   def ngramContamination(eval: DataFrame, train: DataFrame,
       idCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val evalSh = eval.select(col(idCol),
-      explode(array_distinct(shingles(col(textCol), n))).as("g"))
+    // each eval doc's set is built once; its size rides along the explode
+    val evalSh = eval
+      .select(col(idCol), shingleSet(col(textCol), n).as("sh"))
+      .select(col(idCol), col("sh"),
+        size(col("sh")).cast("long").as("n_shingles"))
+      .select(col(idCol), col("n_shingles"), explode_outer(col("sh")).as("g"))
     val trainSh = train
-      .select(explode(array_distinct(shingles(col(textCol), n))).as("g"))
-      .distinct()
-    val hits = evalSh.join(trainSh, Seq("g"), "left_semi")
-      .groupBy(col(idCol)).agg(count(lit(1)).as("n_contaminated"))
-    eval.select(col(idCol),
-        size(array_distinct(shingles(col(textCol), n))).cast("long")
-          .as("n_shingles"))
-      .join(hits, Seq(idCol), "left")
-      .withColumn("n_contaminated",
-        coalesce(col("n_contaminated"), lit(0L)))
+      .select(explode(shingleSet(col(textCol), n)).as("g"))
+      .distinct().withColumn("hit", lit(1L))
+    evalSh.join(trainSh, Seq("g"), "left")
+      .groupBy(col(idCol), col("n_shingles"))
+      .agg(count(col("hit")).as("n_contaminated"))
       .withColumn("contamination", graft.queries.Det.floor4(
         col("n_contaminated").cast("double") / col("n_shingles")))
   }

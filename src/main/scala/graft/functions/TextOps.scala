@@ -305,9 +305,8 @@ object TextOps {
     * aggregate these (a sum of floored doubles is shuffle-order
     * dependent at the ulp level; a sum of longs is not). */
   def dupNgramMilli(text: Column, n: Int): Column = {
-    val sh = DedupOps.shingles(text, n)
-    floor((lit(1.0) - size(array_distinct(sh)).cast("double") /
-      size(sh).cast("double")) * 10000).cast("long")
+    import org.apache.spark.sql.graft.{shims, DupNgramMilliExpr}
+    shims.column(DupNgramMilliExpr(shims.expression(text), n))
   }
 
   /** Tokenizer vocabulary: the top-`k` corpus words by (count DESC,

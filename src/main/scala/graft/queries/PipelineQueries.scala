@@ -115,7 +115,7 @@ object PipelineQueries {
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     Tables(s, dir).documents
       .select(col("doc_id"),
-        size(array_distinct(DedupOps.shingles(col("text"), 3)))
+        size(DedupOps.shingleSet(col("text"), 3))
           .cast("long").as("n_shingles"))
       .orderBy(col("doc_id"))
   }
@@ -2091,7 +2091,7 @@ object PipelineQueries {
   }
 
   // DuckDB-side distinct 3-shingle list (matches
-  // array_distinct(DedupOps.shingles(text, 3)) exactly)
+  // DedupOps.shingleSet(text, 3) exactly)
   private val shingle3Sql =
     """CASE WHEN len(ws) < 3 THEN [array_to_string(ws, ' ')]
       |  ELSE list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
@@ -2216,7 +2216,8 @@ object PipelineQueries {
 
   /** Repetition quality metrics (Gopher-style): duplicated 2-gram and
     * 3-gram fractions per doc — the boilerplate/degenerate-repetition
-    * filter. Pure scan-stage Columns, zero shuffle. */
+    * filter. One native expression per fraction in the scan stage, zero
+    * shuffle. */
   val t09 = QueryDef.sql("t09_repetition",
     s"""SELECT doc_id,
        |  ${Det.floor4Sql("1.0 - CAST(d2 AS DOUBLE) / t2")} AS dup2,

@@ -49,13 +49,6 @@ object Fixtures {
       p.toString
     })
 
-  /** Stage one parquet table into a fresh temp directory for a
-    * file-source stream. Driver testdata ships flat files
-    * (`<table>.parquet`); Spark-written fixtures (the sf1 rehearsal
-    * set) are DIRECTORIES of part files — `Files.copy` on those copies
-    * only the empty directory entry and the downstream stream silently
-    * reads zero rows, so both shapes are handled. Returns the staged
-    * directory path. */
   /** Land `df` as ONE flat parquet file `<stage>/<tag>.parquet`. The
     * scratch write dir lives under `scratchBase`, which must be OUTSIDE
     * `stage` — a streaming file source lists `stage` recursively, so a
@@ -81,6 +74,13 @@ object Fixtures {
     mtimeMs.foreach(dst.toFile.setLastModified(_))
   }
 
+  /** Stage one parquet table into a fresh temp directory for a
+    * file-source stream. Driver testdata ships flat files
+    * (`<table>.parquet`); Spark-written fixtures (the sf1 rehearsal
+    * set) are DIRECTORIES of part files — `Files.copy` on those copies
+    * only the empty directory entry and the downstream stream silently
+    * reads zero rows, so both shapes are handled. Returns the staged
+    * directory path. */
   def stageTable(dir: String, table: String, prefix: String): String = {
     import java.nio.file.{Files, Paths}
     val stage = Files.createTempDirectory(prefix)

@@ -52,6 +52,91 @@ object shims {
       }
 }
 
+/** The native text expressions' shared front end. `normalize` is the
+  * EXACT pipeline of `TextOps.normalize`,
+  * `lower(trim(regexp_replace(text, "\s+", " ")))`, replayed operator by
+  * operator with Spark's own machinery: java.util.regex over the decoded
+  * string (what RegExpReplace runs, pattern compiled ONCE here, not per
+  * row), `UTF8String.trim()` (space-only, exactly StringTrim — Java's
+  * String.trim strips every control character ≤ U+0020), and
+  * `CollationSupport.Lower.exec` with the session ICU flag (exactly the
+  * Lower expression, whichever case mapping the session uses —
+  * String.toLowerCase is a different function that happens to agree
+  * only on some inputs and locales). Values therefore match the Column
+  * form under ANY JVM default locale. */
+object TextNorm {
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val Ws = java.util.regex.Pattern.compile("\\s+")
+
+  def normalize(input: UTF8String, collationId: Int, useICU: Boolean)
+      : UTF8String = {
+    val replaced = Ws.matcher(input.toString).replaceAll(" ")
+    org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(
+      UTF8String.fromString(replaced).trim(), collationId, useICU)
+  }
+
+  /** Every word n-gram of `norm` in order, duplicates kept: for each
+    * start i, `array_join(slice(split(norm, ' '), i + 1, n), ' ')`; the
+    * whole text when it has fewer than n words. Words are the pieces
+    * between single spaces, so each n-gram is one contiguous byte range
+    * of `norm` — the shingles are views over its bytes, found in one
+    * scan, with no string building. */
+  def shingles(norm: UTF8String, n: Int): Array[UTF8String] = {
+    val b = norm.getBytes
+    var words = 1
+    var i = 0
+    while (i < b.length) { if (b(i) == ' ') words += 1; i += 1 }
+    if (words < n) return Array(norm)
+    // start(w) = first byte of word w; start(words) = b.length + 1, as if
+    // a space followed the last word
+    val start = new Array[Int](words + 1)
+    var w = 1
+    i = 0
+    while (i < b.length) {
+      if (b(i) == ' ') { start(w) = i + 1; w += 1 }
+      i += 1
+    }
+    start(words) = b.length + 1
+    Array.tabulate(words - n + 1) { j =>
+      UTF8String.fromBytes(b, start(j), start(j + n) - 1 - start(j))
+    }
+  }
+
+  /** First occurrences of `all`, in order (`array_distinct`). */
+  def distinct(all: Array[UTF8String]): Array[UTF8String] = {
+    val seen = new java.util.LinkedHashSet[UTF8String](all.length * 2)
+    all.foreach(seen.add)
+    seen.toArray(new Array[UTF8String](0))
+  }
+
+  /** The SQL `xxhash64` (seed 42) of a string. */
+  def xxhash(s: UTF8String): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+}
+
+/** A native expression over one STRING column that reads it through
+  * [[TextNorm.normalize]], with Lower's collation dispatch inputs. They
+  * are lazy: the child is unresolved at construction during analysis
+  * rewrites, and is resolved by the first dataType/eval/codegen access. */
+trait NormalizesText extends UnaryExpression with ImplicitCastInputTypes {
+  import org.apache.spark.sql.internal.SQLConf
+  import org.apache.spark.sql.types.StringType
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private lazy val collationId = child.dataType match {
+    case st: StringType => st.collationId
+    case _ => 0
+  }
+  private lazy val icu = SQLConf.get.getConf(SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
+
+  protected def normalized(input: Any): UTF8String =
+    TextNorm.normalize(input.asInstanceOf[UTF8String], collationId, icu)
+}
+
 /** Native codegen'd dot product over two ARRAY<DOUBLE> columns — the hot
   * inner loop of every cosine-similarity operator
   * (graft.functions.SimilarityOps). The higher-order-function equivalent
@@ -111,22 +196,10 @@ case class DotProductExpr(left: Expression, right: Expression)
 case class MinHashSigExpr(child: Expression, k: Int)
     extends UnaryExpression with ImplicitCastInputTypes
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.expressions.XxHash64Function
   import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
   import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 
-  private val P = 2147483647L // 2^31 - 1
-
-  private def mix(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-  private val as: Array[Long] =
-    Array.tabulate(k)(i => (mix(2L * i) & 0x7FFFFFFFL) | 1L)
-  private val bs: Array[Long] =
-    Array.tabulate(k)(i => mix(2L * i + 1) & 0x7FFFFFFFL)
+  private val (as, bs) = MinHashMd5SigExpr.perms(k)
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(StringType))
@@ -135,26 +208,35 @@ case class MinHashSigExpr(child: Expression, k: Int)
 
   override protected def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val mins = Array.fill(k)(Long.MaxValue)
+    new GenericArrayData(MinHashSigExpr.minima(
+      Array.tabulate(arr.numElements())(arr.getUTF8String), as, bs))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : MinHashSigExpr = copy(child = newChild)
+}
+
+object MinHashSigExpr {
+  import MinHashMd5SigExpr.P
+
+  /** The permutation minima over the shingles' xxhash64 (seed 42). */
+  def minima(shingles: Array[org.apache.spark.unsafe.types.UTF8String],
+      as: Array[Long], bs: Array[Long]): Array[Long] = {
+    val mins = Array.fill(as.length)(Long.MaxValue)
     var j = 0
-    while (j < n) {
-      val s = arr.getUTF8String(j)
-      val h0 = XxHash64Function.hash(s, StringType, 42L)
+    while (j < shingles.length) {
+      val h0 = TextNorm.xxhash(shingles(j))
       val h = ((h0 % P) + P) % P
       var i = 0
-      while (i < k) {
+      while (i < as.length) {
         val v = (h * as(i) + bs(i)) % P
         if (v < mins(i)) mins(i) = v
         i += 1
       }
       j += 1
     }
-    new GenericArrayData(mins)
+    mins
   }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : MinHashSigExpr = copy(child = newChild)
 }
 
 /** MinHash signature straight from raw TEXT: normalization
@@ -163,67 +245,21 @@ case class MinHashSigExpr(child: Expression, k: Int)
   * fused form of MinHashSigExpr that also skips the interpreted
   * higher-order split/slice/array_join shingle pipeline. Shingle strings
   * and the permutation family are identical to the compositional path
-  * (TextOps.normalize + DedupOps.shingles + MinHashSigExpr). */
+  * (DedupOps.shingleList + MinHashSigExpr). */
 case class MinHashTextSigExpr(child: Expression, n: Int, k: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends NormalizesText
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.catalyst.expressions.XxHash64Function
   import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
-  import org.apache.spark.unsafe.types.UTF8String
+  import org.apache.spark.sql.types.{ArrayType, LongType}
 
-  private val P = 2147483647L
-  private def mix(z0: Long): Long = {
-    var z = z0 + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-  private val as: Array[Long] =
-    Array.tabulate(k)(i => (mix(2L * i) & 0x7FFFFFFFL) | 1L)
-  private val bs: Array[Long] =
-    Array.tabulate(k)(i => mix(2L * i + 1) & 0x7FFFFFFFL)
+  private val (as, bs) = MinHashMd5SigExpr.perms(k)
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_text_sig"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    // normalize exactly like TextOps.normalize:
-    // lower(trim(regexp_replace(text, "\s+", " ")))
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
-    val words = norm.split(" ", -1)
-    val mins = Array.fill(k)(Long.MaxValue)
-    def update(shingle: String): Unit = {
-      val h0 = XxHash64Function.hash(
-        UTF8String.fromString(shingle), StringType, 42L)
-      val h = ((h0 % P) + P) % P
-      var i = 0
-      while (i < k) {
-        val v = (h * as(i) + bs(i)) % P
-        if (v < mins(i)) mins(i) = v
-        i += 1
-      }
-    }
-    if (words.length < n) update(words.mkString(" "))
-    else {
-      var j = 0
-      val sb = new java.lang.StringBuilder
-      while (j + n <= words.length) {
-        sb.setLength(0)
-        var w = 0
-        while (w < n) {
-          if (w > 0) sb.append(' ')
-          sb.append(words(j + w))
-          w += 1
-        }
-        update(sb.toString)
-        j += 1
-      }
-    }
-    new GenericArrayData(mins)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    new GenericArrayData(MinHashSigExpr.minima(
+      TextNorm.shingles(normalized(input), n), as, bs))
 
   override protected def withNewChildInternal(newChild: Expression)
       : MinHashTextSigExpr = copy(child = newChild)
@@ -335,105 +371,75 @@ case class BandsFirstMatchExpr(left: Expression, right: Expression)
 }
 
 /** Distinct word n-gram shingle set straight from raw TEXT, one per-row
-  * pass: normalization (trim/whitespace-collapse/lowercase), n-gram
-  * shingling and first-occurrence dedup fused — value-identical to
-  * `array_distinct(DedupOps.shingles(text, n))`, whose higher-order
-  * `transform` lambda runs interpreted with per-element dispatch (the
-  * dominant cost of the Jaccard verify stage: ~5 s of a 5.7 s d06 run at
-  * sf0.1 went to building shingle sets for the whole corpus). Shingle
-  * strings match MinHashTextSigExpr's exactly, so estimates computed from
-  * signatures and exact Jaccard computed from these sets agree on the
-  * same underlying set family. */
+  * pass: normalization, n-gram shingling and first-occurrence dedup
+  * fused ([[TextNorm]]) — the value of
+  * `array_distinct(transform(sequence(..), i => array_join(slice(words,
+  * ..))))` over `words = split(TextOps.normalize(text), ' ')`. That
+  * higher-order form runs interpreted, and Spark evaluates the outer
+  * `words` again for every element, so it costs O(words²) per document.
+  * Shingle strings match MinHashTextSigExpr's exactly, so estimates
+  * computed from signatures and exact Jaccard computed from these sets
+  * agree on the same underlying set family. */
 case class ShingleSetExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends NormalizesText
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.sql.types.{ArrayType, StringType}
-  import org.apache.spark.unsafe.types.UTF8String
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingle_set"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    // normalize exactly like TextOps.normalize (and MinHashTextSigExpr):
-    // lower(trim(regexp_replace(text, "\s+", " ")))
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
-    val words = norm.split(" ", -1)
-    val seen = new java.util.LinkedHashSet[String]()
-    if (words.length < n) seen.add(words.mkString(" "))
-    else {
-      var j = 0
-      val sb = new java.lang.StringBuilder
-      while (j + n <= words.length) {
-        sb.setLength(0)
-        var w = 0
-        while (w < n) {
-          if (w > 0) sb.append(' ')
-          sb.append(words(j + w))
-          w += 1
-        }
-        seen.add(sb.toString)
-        j += 1
-      }
-    }
-    val out = new Array[AnyRef](seen.size)
-    val it = seen.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    new GenericArrayData(
+      TextNorm.distinct(TextNorm.shingles(normalized(input), n)))
 
   override protected def withNewChildInternal(newChild: Expression)
       : ShingleSetExpr = copy(child = newChild)
 }
 
 /** The MULTISET sibling of [[ShingleSetExpr]]: every word n-gram of the
-  * normalized text in order, duplicates preserved — value-identical to
-  * `DedupOps.shingles(text, n)` (whose `transform` lambda runs
-  * INTERPRETED per element; this is one tight per-row loop). Hot path
-  * for n-gram counting pipelines (LM cross-entropy), where the corpus
-  * explode dominates wall-time. */
+  * normalized text in order, duplicates preserved. Hot path for n-gram
+  * counting pipelines (LM cross-entropy), where the corpus explode
+  * dominates wall-time. */
 case class ShingleListExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends NormalizesText
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.sql.types.{ArrayType, StringType}
-  import org.apache.spark.unsafe.types.UTF8String
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingle_list"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
-    val words = norm.split(" ", -1)
-    if (words.length < n)
-      return new GenericArrayData(
-        Array[AnyRef](UTF8String.fromString(words.mkString(" "))))
-    val out = new Array[AnyRef](words.length - n + 1)
-    var j = 0
-    val sb = new java.lang.StringBuilder
-    while (j + n <= words.length) {
-      sb.setLength(0)
-      var w = 0
-      while (w < n) {
-        if (w > 0) sb.append(' ')
-        sb.append(words(j + w))
-        w += 1
-      }
-      out(j) = UTF8String.fromString(sb.toString)
-      j += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    new GenericArrayData(TextNorm.shingles(normalized(input), n))
 
   override protected def withNewChildInternal(newChild: Expression)
       : ShingleListExpr = copy(child = newChild)
+}
+
+/** Duplicated word n-gram share of the normalized text as an exact
+  * integer of 1e-4 units, floor((1 − distinct/total)·10⁴), with the
+  * distinct count and the total taken from ONE shingle pass (the
+  * composed form built the shingle array twice). Same double arithmetic
+  * as the composed form, so the value is bit-identical. */
+case class DupNgramMilliExpr(child: Expression, n: Int)
+    extends NormalizesText
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "dup_ngram_milli"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val all = TextNorm.shingles(normalized(input), n)
+    val distinct = TextNorm.distinct(all).length
+    math.floor((1.0 - distinct.toDouble / all.length.toDouble) * 10000)
+      .toLong
+  }
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : DupNgramMilliExpr = copy(child = newChild)
 }
 
 /** Fraction of positions at which two ARRAY<LONG> MinHash signatures
@@ -685,26 +691,20 @@ case class HashingFeaturesExpr(child: Expression, dim: Int)
   * (DedupOps.simhash); this md5 family exists so the signature itself
   * is reproducible by an independent engine (gate d04). */
 case class SimHashMd5Expr(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends NormalizesText
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  import org.apache.spark.sql.types.StringType
-  import org.apache.spark.unsafe.types.UTF8String
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_md5"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
-    val words = norm.split(" ", -1)
+    val words = TextNorm.shingles(normalized(input), 1)
     val md = java.security.MessageDigest.getInstance("MD5")
     val votes = new Array[Int](64)
     var i = 0
     while (i < words.length) {
       md.reset()
-      val d = md.digest(words(i).getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
+      val d = md.digest(words(i).getBytes)
       var h = 0L
       var b = 0
       while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
@@ -729,9 +729,9 @@ case class SimHashMd5Expr(child: Expression)
 }
 
 object MinHashMd5SigExpr {
-  /** The k linear-permutation constants (a_i odd, b_i) — same splitmix
-    * family as MinHashSigExpr; public so the DuckDB oracle SQL can embed
-    * the identical literals. */
+  /** The k linear-permutation constants (a_i odd, b_i) — the splitmix
+    * family every MinHash signature here uses; public so the DuckDB
+    * oracle SQL can embed the identical literals. */
   def perms(k: Int): (Array[Long], Array[Long]) = {
     def mix(z0: Long): Long = {
       var z = z0 + 0x9E3779B97F4A7C15L
@@ -809,45 +809,16 @@ case class MinHashMd5SigExpr(child: Expression, k: Int)
   * on the string arrays ([[SortedIntersectCountExpr]]). Same
   * normalization/shingling as [[ShingleSetExpr]]. */
 case class HashedShingleSetExpr(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes
+    extends NormalizesText
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.sql.types.{ArrayType, StringType}
-  import org.apache.spark.unsafe.types.UTF8String
+  import org.apache.spark.sql.types.ArrayType
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hashed_shingle_set"
 
-  private def hash(s: String): Long = {
-    val u = UTF8String.fromString(s)
-    org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-  }
-
   override protected def nullSafeEval(input: Any): Any = {
-    val norm = input.asInstanceOf[UTF8String].toString
-      .replaceAll("\\s+", " ").trim.toLowerCase
-    val words = norm.split(" ", -1)
-    val raw =
-      if (words.length < n) Array(hash(words.mkString(" ")))
-      else {
-        val out = new Array[Long](words.length - n + 1)
-        var j = 0
-        val sb = new java.lang.StringBuilder
-        while (j + n <= words.length) {
-          sb.setLength(0)
-          var w = 0
-          while (w < n) {
-            if (w > 0) sb.append(' ')
-            sb.append(words(j + w))
-            w += 1
-          }
-          out(j) = hash(sb.toString)
-          j += 1
-        }
-        out
-      }
+    val raw = TextNorm.shingles(normalized(input), n).map(TextNorm.xxhash)
     java.util.Arrays.sort(raw)
     // in-place dedup of the sorted hashes (set semantics, like
     // ShingleSetExpr's LinkedHashSet — collisions also dedup, which the
@@ -947,38 +918,23 @@ case class SortedIntersectCountIntExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Shared core of the fused stopword expressions: the EXACT normalize
-  * pipeline `lower(trim(regexp_replace(text, "\s+", " ")))` replayed
-  * operator by operator with Spark's own machinery — java.util.regex
-  * over the decoded string (what RegExpReplace runs, pattern compiled
-  * ONCE here, not per row), `UTF8String.trim()` (space-only, exactly
-  * StringTrim — Java's String.trim strips all controls ≤ U+0020 and
-  * was a latent mismatch), and `CollationSupport.Lower.exec` with the
-  * session ICU flag (exactly the Lower expression — String.toLowerCase
-  * used the default locale: Turkish-I hazard). Occurrence counting
-  * walks the padded UTF-8 bytes advancing by needle length — the same
-  * non-overlapping match sequence as `replace()` (UTF-8 is
-  * self-synchronizing, so byte matches sit on char boundaries) — so
-  * scores stay bit-identical to the compositional form and the DuckDB
-  * oracle under ANY JVM default locale. */
+/** Shared core of the fused stopword expressions, over the exact
+  * [[TextNorm]] normalize. Occurrence counting walks the padded UTF-8
+  * bytes advancing by needle length — the same non-overlapping match
+  * sequence as `replace()` (UTF-8 is self-synchronizing, so byte
+  * matches sit on char boundaries) — so scores stay bit-identical to
+  * the compositional form and the DuckDB oracle under ANY JVM default
+  * locale. */
 object StopwordScore {
   import org.apache.spark.unsafe.types.UTF8String
-
-  private val Ws = java.util.regex.Pattern.compile("\\s+")
 
   def needles(words: Seq[String]): Array[Array[Byte]] =
     words.map(w => (" " + w + " ")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
 
-  /** `' ' || lower(trim(regexp_replace(input, '\s+', ' '))) || ' '`
-    * as UTF-8 bytes. */
-  def paddedBytes(input: UTF8String, collationId: Int, useICU: Boolean)
-      : Array[Byte] = {
-    val replaced = Ws.matcher(input.toString).replaceAll(" ")
-    val lowered = org.apache.spark.sql.catalyst.util.CollationSupport
-      .Lower.exec(UTF8String.fromString(replaced).trim(), collationId,
-        useICU)
-    val b = lowered.getBytes
+  /** `' ' || norm || ' '` as UTF-8 bytes. */
+  def paddedBytes(norm: UTF8String): Array[Byte] = {
+    val b = norm.getBytes
     val out = new Array[Byte](b.length + 2)
     out(0) = ' '.toByte
     out(out.length - 1) = ' '.toByte
@@ -1013,17 +969,6 @@ object StopwordScore {
     }
     -1
   }
-
-  /** Mirror of Lower's collation dispatch inputs, resolved once at
-    * expression construction (on the driver, under the active
-    * session) and serialized with the expression. */
-  def collationIdOf(e: Expression): Int = e.dataType match {
-    case st: org.apache.spark.sql.types.StringType => st.collationId
-    case _ => 0
-  }
-  def useICU: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get.getConf(
-      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
 }
 
 /** Σ non-overlapping occurrences of ` word ` over space-padded
@@ -1038,23 +983,17 @@ object StopwordScore {
   * sits inside the surrounding WholeStageCodegen span instead of
   * breaking it as a CodegenFallback island. */
 case class StopwordCountExpr(child: Expression, words: Seq[String])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.StringType
+    extends NormalizesText {
   import org.apache.spark.unsafe.types.UTF8String
 
   private val needles = StopwordScore.needles(words)
-  // lazy: the child is unresolved at construction during analysis
-  // rewrites; resolved by the first dataType/eval/codegen access
-  private lazy val collationId = StopwordScore.collationIdOf(child)
-  private lazy val icu = StopwordScore.useICU
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "stopword_count"
 
   def count(input: UTF8String): Long =
     StopwordScore.countAll(
-      StopwordScore.paddedBytes(input, collationId, icu), needles)
+      StopwordScore.paddedBytes(normalized(input)), needles)
 
   override protected def nullSafeEval(input: Any): Any =
     count(input.asInstanceOf[UTF8String])
@@ -1080,21 +1019,18 @@ case class StopwordCountExpr(child: Expression, words: Seq[String])
   * [[StopwordScore]] counts. */
 case class StopwordPreferExpr(child: Expression, a: Seq[String],
     b: Seq[String])
-    extends UnaryExpression with ImplicitCastInputTypes {
-  import org.apache.spark.sql.types.{BooleanType, StringType}
+    extends NormalizesText {
+  import org.apache.spark.sql.types.BooleanType
   import org.apache.spark.unsafe.types.UTF8String
 
   private val needlesA = StopwordScore.needles(a)
   private val needlesB = StopwordScore.needles(b)
-  private lazy val collationId = StopwordScore.collationIdOf(child)
-  private lazy val icu = StopwordScore.useICU
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "stopword_prefer"
 
   def prefer(input: UTF8String): Boolean = {
-    val pad = StopwordScore.paddedBytes(input, collationId, icu)
+    val pad = StopwordScore.paddedBytes(normalized(input))
     StopwordScore.countAll(pad, needlesA) >
       StopwordScore.countAll(pad, needlesB)
   }

@@ -1,14 +1,51 @@
 package graft.functions
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  HigherOrderFunction, LambdaFunction}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
 
+/** Higher-order functions and lambdas anywhere in an executed plan, AQE
+  * stages and subqueries included. */
+private object ExecutedLambdas extends AdaptiveSparkPlanHelper {
+  def apply(plan: SparkPlan): Seq[Expression] =
+    collectWithSubqueries(plan) { case p => p.expressions }.flatten
+      .flatMap(_.collect {
+        case e: HigherOrderFunction => e
+        case e: LambdaFunction => e
+      })
+}
+
 class DedupSpec extends SparkSpec {
   private val docSchema = StructType(Seq(
     StructField("id", LongType), StructField("text", StringType)))
+
+  /** The interpreted `transform` shingle form the native expressions
+    * replaced, kept as the reference they are pinned against. */
+  private def refShingles(text: Column, n: Int): Column = {
+    val words = split(TextOps.normalize(text), " ")
+    when(size(words) < n, array(array_join(words, " ")))
+      .otherwise(transform(sequence(lit(0), size(words) - n),
+        i => array_join(slice(words, i + 1, lit(n)), " ")))
+  }
+
+  /** `dupNgramMilli` as it was composed from two reference arrays. */
+  private def refDupNgramMilli(text: Column, n: Int): Column = {
+    val sh = refShingles(text, n)
+    floor((lit(1.0) - size(array_distinct(sh)).cast("double") /
+      size(sh).cast("double")) * 10000).cast("long")
+  }
+
+  /** Runs `df` and returns the lambdas of its executed plan. */
+  private def lambdasIn(df: DataFrame): Seq[Expression] = {
+    df.collect()
+    ExecutedLambdas(df.queryExecution.executedPlan)
+  }
 
   private val base = ("the quick brown fox jumps over the lazy dog " * 5).trim
   private lazy val docs = df(docSchema,
@@ -29,22 +66,69 @@ class DedupSpec extends SparkSpec {
 
   test("shingles produce n-grams; short docs degrade to whole text") {
     val sh = docs.filter(col("id") === 5)
-      .select(DedupOps.shingles(col("text"), 3)).collect().head.getSeq[String](0)
+      .select(DedupOps.shingleList(col("text"), 3)).collect().head.getSeq[String](0)
     assert(sh == Seq("short text"))
     val sh2 = docs.filter(col("id") === 1)
-      .select(DedupOps.shingles(col("text"), 3)).collect().head.getSeq[String](0)
+      .select(DedupOps.shingleList(col("text"), 3)).collect().head.getSeq[String](0)
     assert(sh2.head == "the quick brown" && sh2.forall(_.split(" ").length == 3))
   }
 
   test("native shingleList == shingles on real documents") {
     val real = graft.sources.Tables(spark, sf("sf0.001")).documents
-      .limit(200)
     for (n <- Seq(1, 2, 3, 5)) {
       val mismatches = real.select(
           DedupOps.shingleList(col("text"), n).as("fused"),
-          DedupOps.shingles(col("text"), n).as("compositional"))
+          refShingles(col("text"), n).as("compositional"))
         .filter(col("fused") =!= col("compositional")).count()
       assert(mismatches == 0, s"n=$n")
+    }
+  }
+
+  test("native dupNgramMilli == the shingle-array form on real documents") {
+    val real = graft.sources.Tables(spark, sf("sf0.001")).documents
+    for (n <- Seq(1, 2, 3, 5)) {
+      val mismatches = real.select(
+          TextOps.dupNgramMilli(col("text"), n).as("fused"),
+          refDupNgramMilli(col("text"), n).as("compositional"))
+        .filter(col("fused") =!= col("compositional")).count()
+      assert(mismatches == 0, s"n=$n")
+    }
+  }
+
+  test("native shingle expressions == the reference on edge inputs " +
+      "under a Turkish default locale") {
+    val edge = df(docSchema,
+      Row(1L, ""), Row(2L, " \t\n  "), Row(3L, "Two words"),
+      Row(4L, "tabs\tand\nnew\r\nlines  Here"),
+      Row(5L, "\u0001leading control char"),
+      Row(6L, "İI"), Row(7L, null))
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      for (n <- Seq(1, 2, 3, 5)) {
+        val rows = edge.select(col("id"),
+            DedupOps.shingleList(col("text"), n),
+            refShingles(col("text"), n),
+            DedupOps.shingleSet(col("text"), n),
+            array_distinct(refShingles(col("text"), n)),
+            TextOps.dupNgramMilli(col("text"), n),
+            refDupNgramMilli(col("text"), n))
+          .collect()
+        rows.foreach { r =>
+          for (i <- Seq(1, 3, 5))
+            assert(r.get(i) == r.get(i + 1), s"n=$n col=$i $r")
+        }
+      }
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("t09, d02, p04 and p17 execute no higher-order lambda") {
+    // the detector itself sees the interpreted form
+    assert(lambdasIn(docs.select(refShingles(col("text"), 3))).nonEmpty)
+    import graft.queries.PipelineQueries._
+    for (q <- Seq(t09, d02, p04, p17)) {
+      val found = lambdasIn(q.run(spark, sf("sf0.001")))
+      assert(found.isEmpty, s"${q.name}: ${found.mkString("; ")}")
     }
   }
 
@@ -63,7 +147,7 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val viaShingles = DedupOps.minhashSignatureFromShingles(
         docs.select(col("id"),
-          DedupOps.shingles(col("text"), 3).as("sh")), "id", "sh", 32)
+          refShingles(col("text"), 3).as("sh")), "id", "sh", 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaText == viaShingles)
   }
@@ -81,11 +165,10 @@ class DedupSpec extends SparkSpec {
 
   test("native shingleSet == array_distinct(shingles) on real documents") {
     val real = graft.sources.Tables(spark, sf("sf0.001")).documents
-      .limit(200)
-    for (n <- Seq(2, 3, 5)) {
+    for (n <- Seq(1, 2, 3, 5)) {
       val mismatches = real.select(
           DedupOps.shingleSet(col("text"), n).as("fused"),
-          array_distinct(DedupOps.shingles(col("text"), n))
+          array_distinct(refShingles(col("text"), n))
             .as("compositional"))
         .filter(col("fused") =!= col("compositional")).count()
       assert(mismatches == 0, s"n=$n")
