@@ -7,16 +7,20 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.HammingDistanceExpr
 
 /** SparkSessionExtensions entry point: registers graft's native
-  * expressions into any session at build time —
+  * expressions and planner additions into any session at build time —
   *
   *   SparkSession.builder().withExtensions(new GraftExtensions)...
   *
   * or via config:
   *   spark.sql.extensions=graft.api.GraftExtensions
   *
-  * This is the deployment-grade packaging for the custom-expression
-  * surface (SURVEY §7.4: no custom Rule/Strategy is *required* for
-  * parity — injection points for them live here when one is).
+  * The planner additions are the optimizer rule
+  * [[org.apache.spark.sql.graft.SingleTaskSort]] (small root sorts in
+  * one partition) and the planner strategy
+  * [[org.apache.spark.sql.graft.PackedCountAgg.Strategy]]. Sessions
+  * built without the extensions get the same two through
+  * [[org.apache.spark.sql.graft.GraftPlanner.install]], which every
+  * engine parquet read and `PackedCountAgg.countByKey` call.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -27,9 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) =>
         HammingDistanceExpr(exprs.head, exprs(1))))
     // count-by-packed-long-key physical operator (gx18's aggregation
-    // core); PackedCountAgg.countByKey also self-registers on sessions
-    // built without extensions
+    // core)
     e.injectPlannerStrategy(_ =>
       org.apache.spark.sql.graft.PackedCountAgg.Strategy)
+    e.injectOptimizerRule(_ => org.apache.spark.sql.graft.SingleTaskSort)
   }
 }

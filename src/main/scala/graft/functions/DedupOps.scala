@@ -107,6 +107,14 @@ object DedupOps {
     shims.column(ShingleListExpr(shims.expression(text), n))
   }
 
+  /** Non-overlapping `segWords`-word segments of the normalized text,
+    * the last one shorter when needed (the p08 segmentation, shared with
+    * the bloom decontamination). One native pass per row. */
+  def wordSegments(text: Column, segWords: Int): Column = {
+    import org.apache.spark.sql.graft.{shims, WordSegmentsExpr}
+    shims.column(WordSegmentsExpr(shims.expression(text), segWords))
+  }
+
   /** C4-style line/paragraph-level exact dedup, generalized to
     * fixed-width word segments (this corpus is single-line, so the
     * "line" unit is a non-overlapping `segWords`-word chunk of the
@@ -116,23 +124,14 @@ object DedupOps {
     * order. Returns (id, text_dedup), one row per input document
     * (documents whose every segment was seen before reassemble to '').
     *
-    * Scale shape: segmentation is map-side (one `transform` over the
-    * word array); the only shuffle is the keep-first window, keyed by
+    * Scale shape: segmentation is map-side (one native pass per
+    * row); the only shuffle is the keep-first window, keyed by
     * the segment content — at 100 TB swap the raw string key for its
     * 16-byte `TextOps.fingerprint` and carry the text, which bounds
     * shuffle rows at |corpus segments| of (16 B + segment) instead of
     * 2× text. The final reassembly aggregates by document id —
     * partial-agg friendly, no skew (segment count per doc is bounded).
     */
-  /** Non-overlapping `segWords`-word segments of the normalized text
-    * (the p08 segmentation, shared with the bloom decontamination). */
-  def wordSegments(text: Column, segWords: Int): Column = {
-    val words = split(TextOps.normalize(text), " ")
-    val nSegs = ceil(size(words) / lit(segWords.toDouble)).cast("int")
-    transform(sequence(lit(0), nSegs - 1),
-      i => array_join(slice(words, i * segWords + 1, lit(segWords)), " "))
-  }
-
   def segmentDedup(df: DataFrame, idCol: String, textCol: String,
       segWords: Int = 10): DataFrame = {
     val segs = wordSegments(col(textCol), segWords)
@@ -145,9 +144,9 @@ object DedupOps {
       .filter(col("__rn") === 1)
     val reassembled = kept
       .groupBy(col(idCol))
-      .agg(concat_ws(" ", transform(
-        array_sort(collect_list(struct(col("seg_idx"), col("seg")))),
-        s => s.getField("seg"))).as("text_dedup"))
+      .agg(concat_ws(" ", sort_array(collect_list(
+        struct(col("seg_idx"), col("seg")))).getField("seg"))
+        .as("text_dedup"))
     df.select(col(idCol))
       .join(reassembled, Seq(idCol), "left")
       .withColumn("text_dedup", coalesce(col("text_dedup"), lit("")))

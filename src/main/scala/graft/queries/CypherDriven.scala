@@ -1179,7 +1179,7 @@ object CypherDriven {
     runOnce() // first incarnation: commits half the input
     stageHalf(even = false, "b")
     runOnce() // restarted incarnation: must pick up ONLY the new file
-    s.read.parquet(out.toString).orderBy(col("event_id"))
+    Tables.readParquet(s, out.toString).orderBy(col("event_id"))
   }
 
   /** WATERMARK LATE-DATA SEMANTICS, pinned end-to-end: batch 1 advances
@@ -1472,7 +1472,8 @@ object CypherDriven {
       arrive("b")
       runOnce() // restart: cross-cut pairs need the RESTORED view state
     } finally s.conf.set("spark.sql.shuffle.partitions", prev)
-    s.read.parquet(out.toString).orderBy(col("click_id"), col("view_id"))
+    Tables.readParquet(s, out.toString)
+      .orderBy(col("click_id"), col("view_id"))
   }.withStage((s, dir) => { st20Halves(s, dir); () })
 
   /** st20's two event halves, memoized per (fixture, dir). The cut must

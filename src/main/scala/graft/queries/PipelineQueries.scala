@@ -379,7 +379,8 @@ object PipelineQueries {
     val batch = docs.filter(col("doc_id") % 10 === 0)
     val tmp = dedupIndexStage(s, dir)
     DedupOps.incrementalNearDups(batch,
-        s.read.parquet(s"$tmp/sig"), s.read.parquet(s"$tmp/bands"),
+        Tables.readParquet(s, s"$tmp/sig"),
+        Tables.readParquet(s, s"$tmp/bands"),
         docs, "doc_id", "text")
       .orderBy(col("id1"), col("id2"))
   }.withStage(dedupIndexStage(_, _))
@@ -413,8 +414,8 @@ object PipelineQueries {
     import org.apache.spark.sql.types._
     val docs = Tables(s, dir).documents
     val tmp = dedupIndexStage(s, dir)
-    val idxSig = s.read.parquet(s"$tmp/sig")
-    val idxBands = s.read.parquet(s"$tmp/bands")
+    val idxSig = Tables.readParquet(s, s"$tmp/sig")
+    val idxBands = Tables.readParquet(s, s"$tmp/bands")
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -464,7 +465,7 @@ object PipelineQueries {
     import org.apache.spark.sql.types._
     val emb = Tables(s, dir).embeddings
     val tmp = st11Stage(s, dir)
-    val catalog = s.read.parquet(s"$tmp/catalog")
+    val catalog = Tables.readParquet(s, s"$tmp/catalog")
     var acc = s.createDataFrame(
       s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("query_id", LongType),
@@ -1493,7 +1494,7 @@ object PipelineQueries {
       |FROM events WHERE event_type IN ('purchase', 'error')
       |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
     val tmp = io09Stage(s, dir)
-    s.read.parquet(tmp)
+    Tables.readParquet(s, tmp)
       .filter(col("event_type").isin("purchase", "error"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -1606,7 +1607,7 @@ object PipelineQueries {
           (col("n_chars") % 100).as("quality"), col("n_chars"))
         .write.mode("overwrite").parquet(s"$stage/shard=new")
     }
-    s.read.option("mergeSchema", "true").parquet(stage)
+    Tables.readParquet(s, stage, Map("mergeSchema" -> "true"))
       .select(col("doc_id"), col("lang"), col("quality"), col("n_chars"))
       .orderBy(col("doc_id"))
   }
@@ -1622,7 +1623,7 @@ object PipelineQueries {
       |FROM documents WHERE lang IN ('en', 'fr')
       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val stage = io04Stage(s, dir)
-    s.read.parquet(stage)
+    Tables.readParquet(s, stage)
       .filter(col("lang").isin("en", "fr"))
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .orderBy(col("doc_id"))

@@ -132,8 +132,8 @@ object GraphStore {
 
   def load(spark: SparkSession, dir: String): GraphState =
     GraphState(
-      spark.read.parquet(s"$dir/vertices"),
-      spark.read.parquet(s"$dir/edges"))
+      Tables.readParquet(spark, s"$dir/vertices"),
+      Tables.readParquet(spark, s"$dir/edges"))
 
   /** The 100 TB layout: vertices partitioned by label (label scans
     * prune to one directory — the on-disk form of the constant-folded

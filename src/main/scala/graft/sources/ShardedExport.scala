@@ -33,7 +33,7 @@ object ShardedExport {
       SamplingOps.shardKey(col(idCol), nShards))
     sharded.write.mode(SaveMode.Overwrite)
       .partitionBy("shard").parquet(path)
-    manifest(df.sparkSession.read.parquet(path), countCols)
+    manifest(Tables.readParquet(df.sparkSession, path), countCols)
   }
 
   /** Per-shard manifest of an already-sharded DataFrame. */

@@ -92,13 +92,13 @@ object EventTs {
     * the flip bought nothing: restore the previous value before
     * re-raising so the failed probe leaves no session-wide residue. */
   private def readAdaptive(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
+    try Tables.readParquet(spark, path)
     catch {
       case e: Throwable if isNanosTypeError(e) =>
         val prev = spark.conf.getOption(
           "spark.sql.legacy.parquet.nanosAsLong")
         enableNanosAsLong(spark)
-        try spark.read.parquet(path)
+        try Tables.readParquet(spark, path)
         catch {
           case retryFailure: Throwable =>
             prev match {
@@ -176,7 +176,7 @@ object EventTs {
   */
 final case class Tables(spark: SparkSession, dir: String) {
   private def t(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -190,6 +190,33 @@ final case class Tables(spark: SparkSession, dir: String) {
   def events: DataFrame = EventTs.readBatch(spark, s"$dir/events.parquet")
   def documents: DataFrame = t("documents")
   def embeddings: DataFrame = t("embeddings")
+}
+
+object Tables {
+
+  /** Every engine parquet read: `spark.read.options(options).parquet(path)`
+    * with the schema read on the driver. Spark's own inference reads
+    * the same single footer, but through a one-task job on every read;
+    * [[org.apache.spark.sql.execution.datasources.parquet.DriverSchema]]
+    * picks that footer and converts it with Spark's converter, so the
+    * schema is identical and building the frame runs no job. A merged
+    * schema (`mergeSchema`, as option or session conf), a streaming
+    * sink's output, or a path with nothing to read keep Spark's own
+    * inference and its errors.
+    *
+    * It also installs graft's planner additions on the session
+    * (idempotent, [[org.apache.spark.sql.graft.GraftPlanner]]), so an
+    * engine session built without [[graft.api.GraftExtensions]] plans
+    * the same as one built with them. */
+  def readParquet(spark: SparkSession, path: String,
+      options: Map[String, String] = Map.empty): DataFrame = {
+    org.apache.spark.sql.graft.GraftPlanner.install(spark)
+    val reader = spark.read.options(options)
+    org.apache.spark.sql.execution.datasources.parquet
+      .DriverSchema(spark, path, options)
+      .fold(reader)(s => reader.schema(s))
+      .parquet(path)
+  }
 }
 
 /** Deterministic property-graph projection of the TPC-H-ish tables, so the

@@ -58,7 +58,7 @@ import org.apache.spark.sql.types.LongType
   * Used by `GraphXBridge.linkCandidates` when the pair key packs into
   * one long (conf `spark.graft.packedCountAgg`, default on);
   * registered for deployment via [[graft.api.GraftExtensions]] and
-  * imperatively (idempotent `experimental.extraStrategies` append) by
+  * imperatively ([[GraftPlanner.install]]) by
   * [[PackedCountAgg.countByKey]] so any session can plan it.
   */
 case class PackedKeyCountNode(
@@ -434,8 +434,8 @@ object PackedCountAgg {
   }
 
   /** `df.groupBy(<the single LONG column>).agg(count(lit(1)) as
-    * countName)` through [[PackedKeyCountExec]]. Registers the planner
-    * strategy on the frame's session if absent (idempotent), so the
+    * countName)` through [[PackedKeyCountExec]]. Installs the planner
+    * strategy on the frame's session ([[GraftPlanner.install]]), so the
     * operator works on sessions built without [[graft.api.GraftExtensions]].
     */
   def countByKey(df: DataFrame, countName: String): DataFrame = {
@@ -444,9 +444,7 @@ object PackedCountAgg {
       s"countByKey wants exactly one LONG key column, got: $schema")
     val cdf = df.asInstanceOf[classic.Dataset[Row]]
     val session = cdf.sparkSession
-    if (!session.experimental.extraStrategies.contains(Strategy))
-      session.experimental.extraStrategies =
-        session.experimental.extraStrategies :+ Strategy
+    GraftPlanner.install(session)
     val countAttr = AttributeReference(countName, LongType,
       nullable = false)()
     classic.Dataset.ofRows(session,

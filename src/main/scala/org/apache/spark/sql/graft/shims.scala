@@ -78,11 +78,24 @@ object TextNorm {
 
   /** Every word n-gram of `norm` in order, duplicates kept: for each
     * start i, `array_join(slice(split(norm, ' '), i + 1, n), ' ')`; the
+    * whole text when it has fewer than n words. */
+  def shingles(norm: UTF8String, n: Int): Array[UTF8String] =
+    ngrams(norm, n, stride = 1)
+
+  /** The non-overlapping n-word segments of `norm` in order: segment j
+    * is `array_join(slice(split(norm, ' '), j * n + 1, n), ' ')`, so the
+    * last one is shorter when n does not divide the word count. */
+  def segments(norm: UTF8String, n: Int): Array[UTF8String] =
+    ngrams(norm, n, stride = n)
+
+  /** Windows of n words starting every `stride` words: stride 1 stops
+    * at the last full window, stride n keeps a short last window; the
     * whole text when it has fewer than n words. Words are the pieces
-    * between single spaces, so each n-gram is one contiguous byte range
-    * of `norm` — the shingles are views over its bytes, found in one
-    * scan, with no string building. */
-  def shingles(norm: UTF8String, n: Int): Array[UTF8String] = {
+    * between single spaces, so each window is one contiguous byte range
+    * of `norm` — views over its bytes, found in one scan, with no string
+    * building. */
+  private def ngrams(norm: UTF8String, n: Int, stride: Int)
+      : Array[UTF8String] = {
     val b = norm.getBytes
     var words = 1
     var i = 0
@@ -98,8 +111,12 @@ object TextNorm {
       i += 1
     }
     start(words) = b.length + 1
-    Array.tabulate(words - n + 1) { j =>
-      UTF8String.fromBytes(b, start(j), start(j + n) - 1 - start(j))
+    val count =
+      if (stride == 1) words - n + 1 else (words + stride - 1) / stride
+    Array.tabulate(count) { j =>
+      val s = j * stride
+      val e = math.min(s + n, words)
+      UTF8String.fromBytes(b, start(s), start(e) - 1 - start(s))
     }
   }
 
@@ -417,6 +434,26 @@ case class ShingleListExpr(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression)
       : ShingleListExpr = copy(child = newChild)
+}
+
+/** The non-overlapping n-word segments of the normalized text, in
+  * order ([[TextNorm.segments]]): the p08 segmentation, shared with the
+  * bloom decontamination. */
+case class WordSegmentsExpr(child: Expression, n: Int)
+    extends NormalizesText
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  import org.apache.spark.sql.catalyst.util.GenericArrayData
+  import org.apache.spark.sql.types.{ArrayType, StringType}
+
+  override def dataType: DataType =
+    ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "word_segments"
+
+  override protected def nullSafeEval(input: Any): Any =
+    new GenericArrayData(TextNorm.segments(normalized(input), n))
+
+  override protected def withNewChildInternal(newChild: Expression)
+      : WordSegmentsExpr = copy(child = newChild)
 }
 
 /** Duplicated word n-gram share of the normalized text as an exact

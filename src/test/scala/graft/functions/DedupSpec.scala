@@ -34,6 +34,14 @@ class DedupSpec extends SparkSpec {
         i => array_join(slice(words, i + 1, lit(n)), " ")))
   }
 
+  /** The interpreted `transform` segment form `wordSegments` replaced. */
+  private def refWordSegments(text: Column, segWords: Int): Column = {
+    val words = split(TextOps.normalize(text), " ")
+    val nSegs = ceil(size(words) / lit(segWords.toDouble)).cast("int")
+    transform(sequence(lit(0), nSegs - 1),
+      i => array_join(slice(words, i * segWords + 1, lit(segWords)), " "))
+  }
+
   /** `dupNgramMilli` as it was composed from two reference arrays. */
   private def refDupNgramMilli(text: Column, n: Int): Column = {
     val sh = refShingles(text, n)
@@ -122,11 +130,40 @@ class DedupSpec extends SparkSpec {
     } finally java.util.Locale.setDefault(saved)
   }
 
-  test("t09, d02, p04 and p17 execute no higher-order lambda") {
-    // the detector itself sees the interpreted form
+  test("native wordSegments == the transform form on real documents " +
+      "and edge inputs under a Turkish default locale") {
+    val real = graft.sources.Tables(spark, sf("sf0.001")).documents
+    for (n <- Seq(1, 3, 10)) {
+      val mismatches = real.select(
+          DedupOps.wordSegments(col("text"), n).as("native"),
+          refWordSegments(col("text"), n).as("reference"))
+        .filter(col("native") =!= col("reference")).count()
+      assert(mismatches == 0, s"n=$n")
+    }
+    val edge = df(docSchema,
+      Row(1L, ""), Row(2L, " \t\n  "), Row(3L, "Two words"),
+      Row(4L, "one two three four five six seven"),
+      Row(5L, "tabs\tand\nnew\r\nlines  Here"),
+      Row(6L, "\u0001leading control char"),
+      Row(7L, "İI"), Row(8L, null))
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+    try {
+      for (n <- Seq(1, 2, 3, 5)) {
+        edge.select(col("id"), DedupOps.wordSegments(col("text"), n),
+            refWordSegments(col("text"), n))
+          .collect()
+          .foreach(r => assert(r.get(1) == r.get(2), s"n=$n $r"))
+      }
+    } finally java.util.Locale.setDefault(saved)
+  }
+
+  test("t09, d02, p04, p17, p08 and p14 execute no higher-order lambda") {
+    // the detector itself sees the interpreted forms
     assert(lambdasIn(docs.select(refShingles(col("text"), 3))).nonEmpty)
+    assert(lambdasIn(docs.select(refWordSegments(col("text"), 3))).nonEmpty)
     import graft.queries.PipelineQueries._
-    for (q <- Seq(t09, d02, p04, p17)) {
+    for (q <- Seq(t09, d02, p04, p17, p08, p14)) {
       val found = lambdasIn(q.run(spark, sf("sf0.001")))
       assert(found.isEmpty, s"${q.name}: ${found.mkString("; ")}")
     }
